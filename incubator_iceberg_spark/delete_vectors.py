@@ -32,6 +32,12 @@ scoping, dangling-delete reclaim, and commit validation all work
 unmodified; ``record_count`` is the TOTAL deleted-position cardinality
 (v3 semantics) so delete-debt metadata stays truthful.
 
+Write path: ``dv_rows_from_pos`` encodes (file_path, pos) tuples into
+DV rows, and ``deletes.write_position_deletes`` writes them through the
+one delete-file writer (``deletes._write_delete_parquet``: same
+partition-scoped or range layouts as pos parquet) with
+``dv_file_stats`` as its per-file entry extractor.
+
 Divergence from v3 (documented): v3 requires exactly one live DV per
 data file (writers must merge).  Our apply is a set-union anti-join, so
 multiple DVs (or DV + plain pos files) for one data file are correct;
@@ -43,9 +49,7 @@ from __future__ import annotations
 
 import os
 import struct
-import uuid
 import zlib
-from typing import Optional
 
 from incubator_iceberg_spark import schema as S
 
@@ -65,6 +69,10 @@ DV_SCHEMA = S.Schema([
 
 _DV_SPARK_DDL = ("file_path string, dv binary, cardinality long, "
                  "min_pos long, max_pos long")
+
+#: DV rows per range-laid output file: rows are one per data file, so
+#: outputs stay ~tens of MB even at 10^6 touched files
+ROWS_PER_FILE = 500_000
 
 
 def is_dv_entry(e: dict) -> bool:
@@ -127,113 +135,24 @@ def dv_rows_from_pos(pos_df):
             .groupBy("file_path").applyInPandas(_enc, _DV_SPARK_DDL))
 
 
-def write_dv_files(spark, table_location: str, pos_df,
-                   path_partitions: Optional[dict] = None,
-                   files_per_output: int = 500_000,
-                   n_rows_bound: Optional[int] = None) -> list:
-    """Write (file_path, pos) tuples as DV parquet under data/; returns
-    raw entry dicts (caller stamps content).  Mirrors
-    deletes._write_delete_parquet's partition scoping: scoped writes keep
-    one DV file per partition so plan-time partition pruning applies;
-    unscoped writes range-partition DV rows by referenced path so each
-    output covers a disjoint path slice with tight ref bounds.
-
-    ``n_rows_bound``: a sound upper bound on the DV row count (== the
-    number of referenced data files — every MoR caller knows its touched
-    file count driver-side).  With it the unscoped layout is sized from
-    the bound and the groupBy+encode runs exactly ONCE inside the write
-    job — no persist, no dedicated count job; an over-estimate only
-    splits the output into more (possibly empty, then dropped) files.
-    Without it a count + persist sizes the layout exactly."""
+def dv_file_stats(path: str) -> dict:
+    """Manifest stats of one written DV file, in the footer-stats shape
+    ``write.file_entries`` consumes.  ``record_count`` is the summed
+    cardinality — deleted positions (v3 semantics): delete-debt
+    accounting counts ROWS deleted, not DV rows — and the ``file_path``
+    bounds are the referenced data files' path range."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
 
-    from incubator_iceberg_spark import deletes as DEL
-
-    dv_df = dv_rows_from_pos(pos_df)
-    if n_rows_bound is None:
-        # the unscoped branch needs a count BEFORE the write to size the
-        # range partitioning — without caching, the groupBy+encode would
-        # run twice
-        dv_df = dv_df.persist()
-    staging = os.path.join(table_location, "data", "dv-" + uuid.uuid4().hex)
-    groups = {}
-    if path_partitions:
-        import json
-        gid_of_key, pk_rows = {}, []
-        for p, (sid, part) in path_partitions.items():
-            key = json.dumps([sid, part], sort_keys=True, default=str)
-            gid = gid_of_key.setdefault(key, len(gid_of_key))
-            groups[gid] = (sid, part)
-            pk_rows.append((p, gid))
-        if len(groups) == 1:
-            path_partitions = None
-        else:
-            map_df = spark.createDataFrame(pk_rows, "file_path string, __pk int")
-            # numbered width: AQE would coalesce repartition("__pk") to
-            # one task that writes every partition dir serially
-            from incubator_iceberg_spark import write as W
-            out = (dv_df.join(F.broadcast(map_df), "file_path", "inner")
-                   .repartition(W.write_shuffle_width(dv_df, len(groups)),
-                                "__pk")
-                   .sortWithinPartitions("__pk", "file_path"))
-            (out.write.mode("errorifexists").partitionBy("__pk")
-             .parquet(staging))
-    if path_partitions is None:
-        # DV rows are one-per-data-file: files_per_output rows/file keeps
-        # outputs ~tens of MB even at 10^6 touched files
-        if n_rows_bound is not None:
-            cnt = n_rows_bound
-        else:
-            cnt = dv_df.count()
-        if cnt == 0:
-            if n_rows_bound is None:
-                dv_df.unpersist()
-            return []
-        n_out = max(1, -(-cnt // files_per_output))
-        from incubator_iceberg_spark.deletes import range_layout
-        (range_layout(dv_df, n_out, "file_path")
-         .write.mode("errorifexists").parquet(staging))
-    if n_rows_bound is None:
-        dv_df.unpersist()
-    files = sorted(
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(staging)
-        for f in fn if f.endswith(".parquet"))
-
-    def _entry_of(p):
-        import pyarrow.compute as pc
-        t = pq.read_table(p, columns=["file_path", "cardinality"])
-        if t.num_rows == 0:
-            os.remove(p)
-            return None
-        paths = t.column("file_path")
-        entry = {
-            "file_path": p,
-            "file_format": DV_FORMAT,
-            # record_count = deleted-position cardinality (v3 semantics):
-            # delete-debt accounting counts ROWS deleted, not DV rows
-            "record_count": int(pc.sum(t.column("cardinality")).as_py()),
-            "file_size_bytes": os.path.getsize(p),
-            "lower_bounds": {"file_path": pc.min(paths).as_py()},
-            "upper_bounds": {"file_path": pc.max(paths).as_py()},
-        }
-        gid = DEL._gid_from_path(p)
-        if groups and len(groups) == 1:
-            (entry["spec_id"], entry["partition"]), = groups.values()
-        elif gid is not None and gid in groups:
-            entry["spec_id"], entry["partition"] = groups[gid]
-        return entry
-
-    if len(files) > 8:
-        # footer/column reads are I/O-bound and release the GIL in
-        # pyarrow — thread them like write.collect_file_stats does
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-            entries = [e for e in ex.map(_entry_of, files) if e is not None]
-    else:
-        entries = [e for e in map(_entry_of, files) if e is not None]
-    return entries
+    t = pq.read_table(path, columns=["file_path", "cardinality"])
+    paths = t.column("file_path")
+    return {
+        "file_path": path,
+        "record_count": int(pc.sum(t.column("cardinality")).as_py() or 0),
+        "file_size_bytes": os.path.getsize(path),
+        "lower_bounds": {"file_path": pc.min(paths).as_py()},
+        "upper_bounds": {"file_path": pc.max(paths).as_py()},
+    }
 
 
 def read_dv_pos_df(spark, dv_entries: list, with_source: bool = False):

@@ -5,6 +5,9 @@ Position deletes  — parquet rows (file_path string, pos long): row `pos`
                     left-anti join on (file, row_index) using Spark's
                     ``_metadata`` lineage columns (DeleteFileIndex.java:65-123,
                     deletes/Deletes.java:46-125 re-expressed).
+Deletion vectors  — the same position deletes as one bitmap row per data
+                    file (delete_vectors.py), chosen by the table
+                    property ``write.delete.format=dv``.
 Equality deletes  — parquet rows holding the equality columns; any data row
                     matching on those columns is deleted.  Applied as a
                     left-anti join on the equality columns.
@@ -14,18 +17,23 @@ Sequence-number scoping (DeleteFileIndex semantics):
 - an equality delete applies to data files with sequence_number < its own
   (rows written together with the delete are NOT affected).
 
-Write path: ``add_position_deletes`` / ``add_equality_deletes`` commit a
-RowDelta-style snapshot (C6) with content=1/2 manifest entries; the data
-plane applies them on every subsequent scan until compaction rewrites the
-affected files.
+Write path: ``_write_delete_parquet`` writes every delete file (pos
+parquet, deletion vector, equality key) and harvests entries through the
+data writer's tail (``write.file_entries``); ``write_position_deletes``
+picks the position-delete format and layout.  ``add_position_deletes`` /
+``add_equality_deletes`` commit a RowDelta-style snapshot (C6) with
+content=1/2 manifest entries; the data plane applies them on every
+subsequent scan until compaction rewrites the affected files.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import uuid
 from typing import Optional
 
+from incubator_iceberg_spark import delete_vectors as DV
 from incubator_iceberg_spark import manifests as MF
 from incubator_iceberg_spark import schema as S
 from incubator_iceberg_spark import snapshots as SN
@@ -40,6 +48,17 @@ POS_DELETE_SCHEMA = S.Schema([
 #: will broadcast (~100 B/tuple in-memory → tens of MB); above this the
 #: join shuffles both sides on the equi keys instead
 BROADCAST_MAX_DELETE_TUPLES = 1_000_000
+
+#: rows per output of a range-laid delete write: position tuples
+#: (~50 MB per file) and equality keys (every affected read opens each
+#: eq-delete file, so keys are consolidated rather than data-partitioned)
+POS_TUPLES_PER_FILE = 5_000_000
+EQ_KEYS_PER_FILE = 2_000_000
+
+# above this many bytes of staged files, the eq-key derivation goes back
+# through a (column-pruned) Spark scan instead of driver-side pyarrow —
+# the driver never materializes more than this many key bytes
+EQ_KEYS_DRIVER_MAX_BYTES = 128 * 1024 * 1024
 
 
 def range_layout(df, n_out: int, *cols):
@@ -58,17 +77,134 @@ def range_layout(df, n_out: int, *cols):
     return df.repartitionByRange(n_out, *cols).sortWithinPartitions(*cols)
 
 
-# above this many bytes of staged files, the eq-key derivation goes back
-# through a (column-pruned) Spark scan instead of driver-side pyarrow —
-# the driver never materializes more than this many key bytes
-EQ_KEYS_DRIVER_MAX_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_EQKEY_DRIVER_MAX", str(128 * 1024 * 1024)))
+def _partition_scope(entries, md):
+    """file_path → (spec_id, partition dict) for partition-SCOPED delete
+    writes — only when every candidate entry carries its partition tuple
+    (local planning on a partitioned table).  None → deletes stay global
+    (DF-planned subsets don't materialize partition values; unpartitioned
+    tables have nothing to scope)."""
+    out = {}
+    for e in entries:
+        sid = e.get("spec_id", md.default_spec_id)
+        spec = md.spec_by_id(sid)
+        if spec is None or not spec.is_partitioned:
+            return None
+        part = e.get("partition")
+        if not isinstance(part, dict):
+            return None
+        out[e["file_path"]] = (sid, dict(part))
+    return out or None
+
+
+def _write_delete_parquet(spark, table_location: str, df, schema: S.Schema,
+                          content: int, keys=None, scope: Optional[dict] = None,
+                          n_out: Optional[int] = None,
+                          file_format: str = "parquet",
+                          file_stats=None) -> list:
+    """Write delete rows as parquet under data/; return entries stamped
+    with ``content``.  Layout, by the first rule that applies:
+
+    - ``scope`` (file_path → (spec_id, partition dict), from
+      ``_partition_scope``) naming two or more partitions:
+      PARTITION-SCOPED like the reference's delete files — each output
+      file belongs to exactly ONE partition, recorded on its entry, so
+      a scan of an untouched partition never plans it and dynamic
+      partition overwrites drop it with its data files.  A
+      one-partition scope falls through and stamps that partition.
+    - ``n_out``: ``range_layout`` on ``keys`` (default: all columns).
+    - otherwise the input's own partitioning.
+
+    ``file_stats`` (path → stats dict) replaces the footer-stats
+    harvest and ``file_format`` the entries' format (deletion vectors
+    count deleted positions, not rows)."""
+    from pyspark.sql import functions as F
+
+    keys = list(keys or [f.name for f in schema.fields])
+    staging = os.path.join(table_location, "data", "deletes-" + uuid.uuid4().hex)
+    groups, pk_rows, gid_of_key = {}, [], {}
+    for p, (sid, part) in (scope or {}).items():
+        key = json.dumps([sid, part], sort_keys=True, default=str)
+        gid = gid_of_key.setdefault(key, len(gid_of_key))
+        groups[gid] = (sid, part)
+        pk_rows.append((p, gid))
+    df = W.align_to_schema(df, schema)
+    if len(groups) > 1:
+        map_df = spark.createDataFrame(pk_rows, "file_path string, __pk int")
+        # numbered width: AQE would coalesce repartition("__pk") to
+        # one task that writes every partition dir serially
+        (df.join(F.broadcast(map_df), "file_path", "inner")
+         .repartition(W.write_shuffle_width(df, len(groups)), "__pk")
+         .sortWithinPartitions("__pk", *keys)
+         .write.mode("errorifexists").partitionBy("__pk").parquet(staging))
+    else:
+        if n_out:
+            df = range_layout(df, n_out, *keys)
+        df.write.mode("errorifexists").parquet(staging)
+    return _staged_delete_entries(spark, staging, schema, content, groups,
+                                  file_format, file_stats)
+
+
+def _staged_delete_entries(spark, staging: str, schema: S.Schema,
+                           content: int, groups: dict,
+                           file_format: str = "parquet",
+                           file_stats=None) -> list:
+    """List → stats → entries for the delete files under ``staging``;
+    ``groups`` (partition-group id → (spec_id, partition)) stamps each
+    file's partition from its ``__pk=N`` directory (one group: all)."""
+    files = W._list_data_files(staging)
+    stats = (W.map_files(file_stats, files) if file_stats is not None
+             else W.collect_file_stats(spark, files, schema))
+    extra = {"content": content}
+    if content == MF.EQUALITY_DELETES:
+        extra["equality_ids"] = [f.field_id for f in schema.fields]
+        extra["eq_schema_fp"] = eq_schema_fingerprint(schema)
+
+    def stamp(e):
+        e.update(extra)
+        seg = os.path.basename(os.path.dirname(e["file_path"]))
+        gid = int(seg[5:]) if seg.startswith("__pk=") else 0
+        if gid in groups:
+            e["spec_id"], e["partition"] = groups[gid]
+
+    return W.file_entries(stats, file_format, stamp)
+
+
+def write_position_deletes(spark, md, pos_df, n_files_hint: int,
+                           path_partitions: Optional[dict] = None,
+                           n_tuples_hint: Optional[int] = None,
+                           fmt: Optional[str] = None) -> list:
+    """Write (file_path, pos) tuples as position-delete files; returns
+    content-stamped entries.  The one place that picks format and
+    layout, for the MoR DELETE / UPDATE writes and the delete
+    maintenance:
+
+    - ``fmt`` (default: table property ``write.delete.format``): 'dv' →
+      deletion vectors, one bitmap row per data file; else pos parquet;
+    - ``path_partitions`` → partition-scoped files;
+    - otherwise a range layout sized from a sound upper bound the
+      caller holds driver-side — no count job, no persist (an
+      over-estimate only splits the output; empty files are dropped):
+      ``n_files_hint`` (touched data files) bounds the DV rows,
+      ``n_tuples_hint`` the pos tuples (without it pos parquet keeps
+      the input's partitioning)."""
+    if (fmt or md.properties.get("write.delete.format")) == DV.DV_FORMAT:
+        return _write_delete_parquet(
+            spark, md.location, DV.dv_rows_from_pos(pos_df), DV.DV_SCHEMA,
+            MF.POSITION_DELETES, keys=["file_path"], scope=path_partitions,
+            n_out=max(1, -(-n_files_hint // DV.ROWS_PER_FILE)),
+            file_format=DV.DV_FORMAT, file_stats=DV.dv_file_stats)
+    n_out = None if n_tuples_hint is None else \
+        max(1, -(-n_tuples_hint // POS_TUPLES_PER_FILE))
+    return _write_delete_parquet(spark, md.location, pos_df,
+                                 POS_DELETE_SCHEMA, MF.POSITION_DELETES,
+                                 scope=path_partitions, n_out=n_out)
 
 
 def eq_keys_from_staged(spark, table_location: str, staged_entries: list,
                         del_schema: S.Schema) -> list:
     """Equality-delete key file derived from the epoch's own STAGED data
-    files instead of a second pass over the batch DataFrame.
+    files instead of a second pass over the batch DataFrame; returns
+    content-stamped entries.
 
     When an upsert-MoR epoch has no op_col, the staged rows' keys ARE the
     batch's keys (the batch is key-deduped before staging), so re-running
@@ -84,165 +220,36 @@ def eq_keys_from_staged(spark, table_location: str, staged_entries: list,
     paths = [e["file_path"] for e in staged_entries]
     total = sum(e.get("file_size_bytes") or 0 for e in staged_entries)
     n_keys = sum(e.get("record_count") or 0 for e in staged_entries)
-    if total <= EQ_KEYS_DRIVER_MAX_BYTES and n_keys <= 2_000_000:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        tabs = [pq.read_table(p, columns=cols) for p in paths]
-        tbl = tabs[0] if len(tabs) == 1 else pa.concat_tables(tabs)
-        # sorted keys → tight per-file bounds for scope_deletes_for_file
-        tbl = tbl.sort_by([(c, "ascending") for c in cols])
-        staging = os.path.join(table_location, "data",
-                               "deletes-" + uuid.uuid4().hex)
-        os.makedirs(staging, exist_ok=True)
-        path = os.path.join(staging, "part-00000.parquet")
-        pq.write_table(tbl, path, compression="zstd")
-        st = W.footer_stats(path, del_schema)
-        if not st["record_count"]:
-            os.remove(path)
-            return []
-        return [{
-            "file_path": st["file_path"],
-            "file_format": "parquet",
-            "record_count": st["record_count"],
-            "file_size_bytes": st["file_size_bytes"],
-            "value_counts": st["value_counts"],
-            "null_counts": st["null_counts"],
-            "lower_bounds": st["lower_bounds"],
-            "upper_bounds": st["upper_bounds"],
-        }]
-    df = spark.read.parquet(*paths).select(*cols)
-    n_out = max(1, -(-n_keys // 2_000_000))
-    return _write_delete_parquet(spark, table_location,
-                                 range_layout(df, n_out, *cols), del_schema)
-
-
-def _write_delete_parquet(spark, table_location: str, df, schema: S.Schema,
-                          path_partitions: Optional[dict] = None) -> list:
-    """Write delete rows as parquet under data/; return raw entry dicts.
-
-    ``path_partitions`` (file_path → (spec_id, partition dict)) makes the
-    write PARTITION-SCOPED like the reference's delete files: rows are
-    grouped by the referenced data file's partition and each output file
-    belongs to exactly ONE partition, recorded on its entry.  Scoped
-    delete entries participate in plan-time partition pruning (a scan of
-    an untouched partition never even plans them) and are dropped by
-    dynamic partition overwrites together with their data files."""
-    from pyspark.sql import functions as F
-
-    staging = os.path.join(table_location, "data", "deletes-" + uuid.uuid4().hex)
-    groups = {}
-    if path_partitions:
-        import json
-        gid_of_key, pk_rows = {}, []
-        for p, (sid, part) in path_partitions.items():
-            key = json.dumps([sid, part], sort_keys=True, default=str)
-            gid = gid_of_key.setdefault(key, len(gid_of_key))
-            groups[gid] = (sid, part)
-            pk_rows.append((p, gid))
-        if len(groups) == 1:
-            path_partitions = None  # single partition: plain write + stamp
-        else:
-            map_df = spark.createDataFrame(pk_rows, "file_path string, __pk int")
-            # numbered width: AQE would coalesce repartition("__pk") to
-            # one task that writes every partition dir serially
-            df = (df.join(F.broadcast(map_df), "file_path", "inner")
-                  .repartition(W.write_shuffle_width(df, len(groups)),
-                               "__pk")
-                  .sortWithinPartitions("__pk", *df.columns))
-            (df.write.mode("errorifexists").partitionBy("__pk")
-             .parquet(staging))
-    if path_partitions is None:
-        W.align_to_schema(df.drop("__pk"), schema) \
-            .write.mode("errorifexists").parquet(staging)
-    files = W._list_parquet_files(staging)
-    # thread-pooled footer reads (>8 files), same as the data-file path
-    stats = W.collect_file_stats(spark, files, schema)
-    entries = []
-    for st in stats:
-        if not st["record_count"]:
-            # empty part files delete nothing but would be applied to
-            # every data file (no stats → no bounds to prune on)
-            os.remove(st["file_path"])
-            continue
-        entry = {
-            "file_path": st["file_path"],
-            "file_format": "parquet",
-            "record_count": st["record_count"],
-            "file_size_bytes": st["file_size_bytes"],
-            "value_counts": st["value_counts"],
-            "null_counts": st["null_counts"],
-            "lower_bounds": st["lower_bounds"],
-            "upper_bounds": st["upper_bounds"],
-        }
-        gid = _gid_from_path(st["file_path"])
-        if groups and len(groups) == 1:
-            (entry["spec_id"], entry["partition"]), = groups.values()
-        elif gid is not None and gid in groups:
-            entry["spec_id"], entry["partition"] = groups[gid]
-        entries.append(entry)
-    return entries
-
-
-def _gid_from_path(path: str):
-    """Partition-group id from a ``__pk=N`` path segment, else None."""
-    for seg in path.split(os.sep):
-        if seg.startswith("__pk="):
-            try:
-                return int(seg[5:])
-            except ValueError:
-                return None
-    return None
+    if total > EQ_KEYS_DRIVER_MAX_BYTES or n_keys > EQ_KEYS_PER_FILE:
+        return _write_delete_parquet(
+            spark, table_location, spark.read.parquet(*paths).select(*cols),
+            del_schema, MF.EQUALITY_DELETES,
+            n_out=max(1, -(-n_keys // EQ_KEYS_PER_FILE)))
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    tabs = [pq.read_table(p, columns=cols) for p in paths]
+    tbl = tabs[0] if len(tabs) == 1 else pa.concat_tables(tabs)
+    # sorted keys → tight per-file bounds for scope_deletes_for_file
+    tbl = tbl.sort_by([(c, "ascending") for c in cols])
+    staging = os.path.join(table_location, "data",
+                           "deletes-" + uuid.uuid4().hex)
+    os.makedirs(staging, exist_ok=True)
+    pq.write_table(tbl, os.path.join(staging, "part-00000.parquet"),
+                   compression="zstd")
+    return _staged_delete_entries(spark, staging, del_schema,
+                                  MF.EQUALITY_DELETES, {})
 
 
 def add_position_deletes(table, pos_df, spark=None):
     """Commit position deletes: DataFrame of (file_path, pos).  file_path
-    must match manifest-recorded data file paths (plain paths, no scheme)."""
+    must match manifest-recorded data file paths (plain paths, no scheme).
+    Their bounds are keyed by delete-file columns, not table columns, so
+    they don't take part in table-column metrics pruning."""
     spark = spark or table.spark
-    entries = _write_delete_parquet(spark, table.location, pos_df, POS_DELETE_SCHEMA)
-    for e in entries:
-        e["content"] = MF.POSITION_DELETES
-        # bounds keyed by delete-file columns, not table columns → they
-        # don't participate in table-column metrics pruning
+    entries = _write_delete_parquet(spark, table.location, pos_df,
+                                    POS_DELETE_SCHEMA, MF.POSITION_DELETES)
     table.metadata = SN.append_files(table.ops, entries, operation="delete")
     return table
-
-
-def add_position_delete_vectors(table, pos_df, spark=None):
-    """Commit position deletes as DELETION VECTORS (delete_vectors.py):
-    one bitmap row per referenced data file instead of exploded
-    (file_path, pos) rows — the compact steady-state delete layout."""
-    from incubator_iceberg_spark import delete_vectors as DV
-
-    spark = spark or table.spark
-    entries = DV.write_dv_files(spark, table.location, pos_df)
-    for e in entries:
-        e["content"] = MF.POSITION_DELETES
-    table.metadata = SN.append_files(table.ops, entries, operation="delete")
-    return table
-
-
-def write_position_deletes(spark, md, pos_df, path_partitions=None,
-                           n_files_hint: Optional[int] = None) -> list:
-    """Write pos tuples in the table's configured delete layout
-    (``write.delete.format``: 'dv' → deletion vectors, default exploded
-    pos parquet); returns content-stamped entries.  The MoR DELETE /
-    UPDATE write paths route through here so one table property flips a
-    table to DV maintenance.  ``n_files_hint`` = the caller's touched
-    data-file count: a sound bound on the DV row count that lets the DV
-    writer size its layout without a count job + persist."""
-    if md.properties.get("write.delete.format") == "dv":
-        from incubator_iceberg_spark import delete_vectors as DV
-        entries = DV.write_dv_files(spark, md.location, pos_df,
-                                    path_partitions=path_partitions,
-                                    n_rows_bound=n_files_hint)
-    else:
-        entries = _write_delete_parquet(spark, md.location, pos_df,
-                                        POS_DELETE_SCHEMA,
-                                        path_partitions=path_partitions)
-    entries = [e for e in entries if e.get("record_count")]
-    for e in entries:
-        e["content"] = MF.POSITION_DELETES
-    return entries
 
 
 def add_equality_deletes(table, del_df, equality_cols, spark=None):
@@ -256,7 +263,6 @@ def add_equality_deletes(table, del_df, equality_cols, spark=None):
         if f is None:
             raise ValueError(f"equality column not in schema: {c}")
         fields.append(f)
-    del_schema = S.Schema(fields)
     # REBALANCE before the write (guide §6: output file sizing): without
     # it the eq file count equals the upstream split count — a keys DF
     # derived from a large scan writes one TINY eq file per input split,
@@ -269,12 +275,8 @@ def add_equality_deletes(table, del_df, equality_cols, spark=None):
     # (narrow per-file bounds) needs a key count the caller doesn't have;
     # convert_equality_deletes already range-lays the converted tuples.
     keys = del_df.select(*equality_cols).hint("rebalance")
-    entries = _write_delete_parquet(spark, table.location, keys, del_schema)
-    fp = eq_schema_fingerprint(del_schema)
-    for e in entries:
-        e["content"] = MF.EQUALITY_DELETES
-        e["equality_ids"] = [f.field_id for f in fields]
-        e["eq_schema_fp"] = fp
+    entries = _write_delete_parquet(spark, table.location, keys,
+                                    S.Schema(fields), MF.EQUALITY_DELETES)
     table.metadata = SN.append_files(table.ops, entries, operation="delete")
     return table
 
@@ -364,7 +366,6 @@ def arrow_apply_pos_deletes(tbl, data_file_path: str, pos_paths: list,
         # rows — sniff the footer (already needed for the read) and
         # decode only the matching data file's blob
         if "dv" in pq.read_schema(p).names:
-            from incubator_iceberg_spark import delete_vectors as DV
             positions.update(
                 DV.dv_positions_for_file(p, data_file_path).tolist())
             continue
@@ -658,7 +659,6 @@ def apply_delete_files(spark, data_df, data_seq_by_file: dict,
     if not delete_entries:
         return data_df
 
-    from incubator_iceberg_spark import delete_vectors as DV
     pos_all = [e for e in delete_entries if e.get("content") == MF.POSITION_DELETES]
     pos_entries = [e for e in pos_all if not DV.is_dv_entry(e)]
     dv_entries = [e for e in pos_all if DV.is_dv_entry(e)]

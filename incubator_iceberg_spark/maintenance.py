@@ -572,7 +572,6 @@ def rewrite_position_deletes(table, spark=None, fmt: Optional[str] = None) -> di
 
     spark = spark or table.spark
     md = table.metadata
-    fmt = fmt or md.properties.get("write.delete.format", "parquet")
     data, dels = TableScan(table, spark)._plan_split()
     pos = [e for e in dels if (e.get("content") or 0) == MF.POSITION_DELETES]
     if not pos:
@@ -599,35 +598,17 @@ def rewrite_position_deletes(table, spark=None, fmt: Optional[str] = None) -> di
             .filter(F.col("___del_seq") >= F.col("___data_seq"))
             .select("file_path", "pos").distinct())
     old_paths = {e["file_path"] for e in pos}
-    from incubator_iceberg_spark.row_ops import _partition_scope
-    scope = _partition_scope(data, table.metadata)
-    if fmt == "dv":
-        # DV rows ≤ live data files referenced, bounded by len(data)
-        added = DV.write_dv_files(spark, md.location, kept,
-                                  path_partitions=scope,
-                                  n_rows_bound=len(data))
-    elif scope:
-        # partition-scoped consolidation: the rewrite preserves the
-        # per-partition delete-file layout the MoR writes produce
-        out = kept.sortWithinPartitions("file_path", "pos")
-        added = DEL._write_delete_parquet(
-            spark, table.metadata.location, out, DEL.POS_DELETE_SCHEMA,
-            path_partitions=scope)
-    else:
-        # global fallback: range-partition by referenced path — each
-        # consolidated file covers a DISJOINT path slice, so its
-        # persisted ref bounds prune tightly and a 100 TB debt
-        # rewrite parallelizes (~5M tuples ≈ 50 MB per output file).
-        # Sized from the driver-side input-tuple total (a sound upper
-        # bound on kept: kept ⊆ input tuples), so the join+distinct
-        # runs exactly once inside the write job — no count job, no
-        # persist; empty over-split parts are dropped by the writer.
-        n_out = max(1, -(-total // 5_000_000))
-        out = DEL.range_layout(kept, n_out, "file_path", "pos")
-        added = DEL._write_delete_parquet(
-            spark, table.metadata.location, out, DEL.POS_DELETE_SCHEMA)
-    for e in added:
-        e["content"] = MF.POSITION_DELETES
+    # the rewrite preserves the per-partition delete-file layout the MoR
+    # writes produce; unscoped, each consolidated file covers a DISJOINT
+    # referenced-path slice, so its persisted ref bounds prune tightly
+    # and a 100 TB debt rewrite parallelizes.  Sized from driver-side
+    # bounds (kept ⊆ input tuples; DV rows ≤ live data files), so the
+    # join+distinct runs exactly once inside the write job — no count
+    # job, no persist; empty over-split parts are dropped by the writer.
+    added = DEL.write_position_deletes(
+        spark, md, kept, len(data),
+        path_partitions=DEL._partition_scope(data, md),
+        n_tuples_hint=total, fmt=fmt)
     # recovered from the written entries' footer stats (DV record_count
     # is deleted-position cardinality — same multiset)
     n_kept = sum(e.get("record_count") or 0 for e in added)
@@ -738,34 +719,18 @@ def convert_equality_deletes(table, spark=None) -> dict:
         matches = matches.distinct()
         n_tuples = None  # unknown; small by bound
     if n_tuples or n_tuples is None:
-        from incubator_iceberg_spark.row_ops import _partition_scope
-        scope = _partition_scope(dirty, md)
         # layout heuristic: partition-scoped files prune at plan time but
         # cost one tiny file per partition — below ~1M total tuples the
         # per-file read overhead exceeds what pruning saves (measured:
         # 80 per-month files read SLOWER than the eq debt they replaced),
         # so small conversions write the consolidated range-partitioned
-        # layout (disjoint referenced-path slices, tight ref bounds)
-        if md.properties.get("write.delete.format") == "dv":
-            from incubator_iceberg_spark import delete_vectors as DV
-            added = DV.write_dv_files(
-                spark, md.location, matches,
-                path_partitions=scope if (n_tuples or 0) >= 1_000_000
-                else None,
-                # DV rows ≤ the dirty files the tuples reference
-                n_rows_bound=len(dirty))
-        elif scope and (n_tuples or 0) >= 1_000_000:
-            out = matches.sortWithinPartitions("file_path", "pos")
-            added = DEL._write_delete_parquet(
-                spark, md.location, out, DEL.POS_DELETE_SCHEMA,
-                path_partitions=scope)
-        else:
-            n_out = max(1, -(-(n_tuples or 1) // 5_000_000))
-            out = DEL.range_layout(matches, n_out, "file_path", "pos")
-            added = DEL._write_delete_parquet(
-                spark, md.location, out, DEL.POS_DELETE_SCHEMA)
-        for e in added:
-            e["content"] = MF.POSITION_DELETES
+        # layout (disjoint referenced-path slices, tight ref bounds).
+        # Converted tuples ≤ est_bound; DV rows ≤ the dirty files.
+        added = DEL.write_position_deletes(
+            spark, md, matches, len(dirty),
+            path_partitions=(DEL._partition_scope(dirty, md)
+                             if (n_tuples or 0) >= 1_000_000 else None),
+            n_tuples_hint=est_bound if n_tuples is None else n_tuples)
     if matches is not None and exact_count:
         matches.unpersist()
     if n_tuples is None:

@@ -455,10 +455,26 @@ def _json_default(o):
     raise TypeError(f"not JSON serializable: {o!r}")
 
 
+def _emit_commit_events(base: Optional[TableMetadata], updated) -> None:
+    from incubator_iceberg_spark import events as EVT
+
+    had = {s.snapshot_id for s in getattr(base, "snapshots", None) or ()}
+    for snap in getattr(updated, "snapshots", None) or ():
+        if snap.snapshot_id not in had:
+            EVT.emit(EVT.CommitEvent(
+                table_location=updated.location,
+                snapshot_id=snap.snapshot_id, operation=snap.operation,
+                sequence_number=snap.sequence_number,
+                summary=dict(snap.summary)))
+
+
 def run_with_retries(ops: TableOperations, apply_update: Callable[[Optional[TableMetadata]], TableMetadata],
                      retries: Optional[int] = None) -> TableMetadata:
     """SnapshotProducer.java:270-300 retry loop: refresh → re-apply pending
-    change → attempt atomic swap; retry only on CommitFailedException."""
+    change → attempt atomic swap; retry only on CommitFailedException.
+    One CommitEvent per snapshot the swap added, emitted only after the
+    swap lands — a conflicted attempt or a failed transaction emits
+    nothing (the reference notifies listeners after the commit)."""
     base = ops.refresh()
     n = retries if retries is not None else (
         base.property(COMMIT_NUM_RETRIES, COMMIT_NUM_RETRIES_DEFAULT) if base
@@ -470,6 +486,7 @@ def run_with_retries(ops: TableOperations, apply_update: Callable[[Optional[Tabl
         try:
             new_version = ops.commit(base_version, updated)
             updated._version = new_version  # type: ignore[attr-defined]
+            _emit_commit_events(base, updated)
             return updated
         except CommitFailedException:
             attempt += 1

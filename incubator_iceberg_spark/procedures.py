@@ -124,16 +124,7 @@ def add_files(table, source_dir, spark=None,
                                  properties=table.metadata.properties)
     entries = []
     for st in stats:
-        e = {
-            "file_path": st["file_path"],
-            "file_format": file_format,
-            "record_count": st["record_count"],
-            "file_size_bytes": st["file_size_bytes"],
-            "value_counts": st["value_counts"],
-            "null_counts": st["null_counts"],
-            "lower_bounds": st["lower_bounds"],
-            "upper_bounds": st["upper_bounds"],
-        }
+        e = W.entry_from_stats(st, file_format)
         if nm is not None:
             e["schema_id"] = NM.FOREIGN_SCHEMA_ID
         if spec.is_partitioned:
@@ -190,18 +181,9 @@ def _add_files_from_hive_paths(table, source_dir, spark,
                 st["lower_bounds"][src] = v
                 st["upper_bounds"][src] = v
                 st["null_counts"][src] = 0
-        entries.append({
-            "file_path": st["file_path"],
-            "file_format": file_format,
-            "record_count": st["record_count"],
-            "file_size_bytes": st["file_size_bytes"],
-            "value_counts": st["value_counts"],
-            "null_counts": st["null_counts"],
-            "lower_bounds": st["lower_bounds"],
-            "upper_bounds": st["upper_bounds"],
-            "schema_id": MF.HIVE_IMPORT_SCHEMA_ID,
-            "partition": pv,
-        })
+        entries.append(dict(W.entry_from_stats(st, file_format),
+                            schema_id=MF.HIVE_IMPORT_SCHEMA_ID,
+                            partition=pv))
     table.metadata = SN.append_files(table.ops, entries)
     return {"added_files": len(entries),
             "added_records": sum(e["record_count"] for e in entries)}
@@ -271,14 +253,10 @@ def snapshot_table(catalog, source_name: str, dest_name: str, spark=None):
     references the source table's current data files (no copy)."""
     src = catalog.load_table(source_name, spark=spark)
     dest = catalog.create_table(dest_name, src.schema(), spark=spark)
-    entries = []
     # force: a None for over-threshold metadata would silently snapshot
     # an EMPTY table
-    for e in src.new_scan(spark or catalog.spark).plan_entries_local(force=True):
-        entries.append({k: e.get(k) for k in (
-            "file_path", "file_format", "record_count", "file_size_bytes",
-            "value_counts", "null_counts", "nan_counts",
-            "lower_bounds", "upper_bounds")})
+    planned = src.new_scan(spark or catalog.spark).plan_entries_local(force=True)
+    entries = [W.entry_from_stats(e, e.get("file_format")) for e in planned]
     dest.metadata = SN.append_files(dest.ops, entries)
     return dest
 

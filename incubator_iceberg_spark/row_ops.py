@@ -40,25 +40,6 @@ _CARDINALITY_MSG = "MERGE_CARDINALITY_VIOLATION: a target row matched more than 
 # python-side inclusive metrics check (conflict validation on entry dicts)
 # ---------------------------------------------------------------------------
 
-def _partition_scope(entries, md):
-    """file_path → (spec_id, partition dict) for partition-SCOPED delete
-    writes — only when every candidate entry carries its partition tuple
-    (local planning on a partitioned table).  None → deletes stay global
-    (DF-planned subsets don't materialize partition values; unpartitioned
-    tables have nothing to scope)."""
-    out = {}
-    for e in entries:
-        sid = e.get("spec_id", md.default_spec_id)
-        spec = md.spec_by_id(sid)
-        if spec is None or not spec.is_partitioned:
-            return None
-        part = e.get("partition")
-        if not isinstance(part, dict):
-            return None
-        out[e["file_path"]] = (sid, dict(part))
-    return out or None
-
-
 def _pos_delete_targets(pos_entries: list, candidate_paths) -> set:
     """The data-file paths a batch of freshly written position-delete files
     may reference, narrowed by each delete file's ``file_path`` column
@@ -312,7 +293,6 @@ def delete_where_mor(table, expr: X.Expression, spark=None) -> dict:
     list for every row of a file would be strictly worse."""
     from pyspark.sql import functions as F
     from incubator_iceberg_spark import deletes as DEL
-    from incubator_iceberg_spark import manifests as MF
 
     spark = spark or table.spark
     md = table.metadata
@@ -348,9 +328,8 @@ def delete_where_mor(table, expr: X.Expression, spark=None) -> dict:
         # match: write_position_deletes drops empty delete files, and
         # honors write.delete.format=dv (deletion vectors)
         new_entries = DEL.write_position_deletes(
-            spark, md, pos,
-            path_partitions=_partition_scope([r.entry for r in mor], md),
-            n_files_hint=len(mor))
+            spark, md, pos, len(mor),
+            path_partitions=DEL._partition_scope([r.entry for r in mor], md))
         marked_rows = sum(e["record_count"] for e in new_entries)
 
     deleted_paths = {r["file_path"] for r in full_drop}
@@ -385,7 +364,6 @@ def update_mor(table, assignments: dict, condition: X.Expression,
     bytes written scale with matched rows, not touched-file size."""
     from pyspark.sql import functions as F
     from incubator_iceberg_spark import deletes as DEL
-    from incubator_iceberg_spark import manifests as MF
 
     spark = spark or table.spark
     md = table.metadata
@@ -408,8 +386,8 @@ def update_mor(table, assignments: dict, condition: X.Expression,
                           F.col("_pos").alias("pos"))
            .sortWithinPartitions("file_path", "pos"))
     pos_entries = DEL.write_position_deletes(
-        spark, md, pos, path_partitions=_partition_scope(data, md),
-        n_files_hint=len(data))
+        spark, md, pos, len(data),
+        path_partitions=DEL._partition_scope(data, md))
     if not pos_entries:
         # stats admitted files but no row matched: nothing to commit
         matched.unpersist()

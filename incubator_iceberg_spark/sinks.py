@@ -101,18 +101,7 @@ class _TaskWriter:
             n_files[0] += 1
             import pyarrow.parquet as pq
             pq.write_table(tbl, path)
-            st = W.footer_stats(path, schema)
-            e = {
-                "file_path": path,
-                "file_format": "parquet",
-                "record_count": st["record_count"],
-                "file_size_bytes": st["file_size_bytes"],
-                "value_counts": st["value_counts"],
-                "null_counts": st["null_counts"],
-                "nan_counts": st.get("nan_counts"),
-                "lower_bounds": st["lower_bounds"],
-                "upper_bounds": st["upper_bounds"],
-            }
+            e = W.entry_from_stats(W.footer_stats(path, schema), "parquet")
             if spec.is_partitioned:
                 e["partition"] = dict(zip((f.name for f in spec.fields), key))
             entries.append(e)

@@ -324,10 +324,6 @@ def _install_snapshot(base: Optional[TableMetadata], make_manifest_rows: Callabl
     )
     stage_only = (extra_summary or {}).get("wap.id") is not None and \
         base.properties.get("write.wap.enabled", "false") == "true"
-    from incubator_iceberg_spark import events as EVT
-    EVT.emit(EVT.CommitEvent(
-        table_location=base.location, snapshot_id=snapshot_id,
-        operation=operation, sequence_number=seq, summary=dict(summary)))
     if branch is not None and branch != "main":
         return _apply_extra_properties(
             base.with_snapshot(snap, set_current=False).with_ref(

@@ -663,17 +663,12 @@ def upsert_mor_exactly_once(table, batch_df, epoch_id: int, on=None,
                 n_keys = sum(e.get("record_count") or 0 for e in entries)
                 if n_keys == 0:
                     n_keys = key_df.count()
-                n_out = max(1, -(-n_keys // 2_000_000))
                 # the common small-epoch path (n_out == 1) skips the
                 # range partitioner's sampling pass and shuffle
-                key_df = DEL.range_layout(key_df, n_out, *on)
                 eq_entries = DEL._write_delete_parquet(
-                    spark, md.location, key_df, del_schema)
-            fp = DEL.eq_schema_fingerprint(del_schema)
-            for e in eq_entries:
-                e["content"] = MF.EQUALITY_DELETES
-                e["equality_ids"] = [f.field_id for f in key_fields]
-                e["eq_schema_fp"] = fp
+                    spark, md.location, key_df, del_schema,
+                    MF.EQUALITY_DELETES,
+                    n_out=max(1, -(-n_keys // DEL.EQ_KEYS_PER_FILE)))
             entries = entries + eq_entries
         if not entries:
             return False

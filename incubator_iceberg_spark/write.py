@@ -23,12 +23,11 @@ import base64
 import json
 import os
 import uuid
-from datetime import date, datetime, timezone
+from datetime import date, datetime
 from decimal import Decimal
 from typing import Optional
 from urllib.parse import unquote
 
-from incubator_iceberg_spark import expressions as X
 from incubator_iceberg_spark import manifests as MF
 from incubator_iceberg_spark import metadata as MD
 from incubator_iceberg_spark import schema as S
@@ -51,40 +50,29 @@ def align_to_schema(df, schema: S.Schema):
     from pyspark.sql import functions as F
 
     have = {c.lower(): c for c in df.columns}
+    for f in schema.fields:
+        if f.required and f.name.lower() not in have:
+            raise ValueError(f"required column {f.name} missing from input")
     # fast path: ONE selectExpr py4j round trip instead of ~4 JVM calls
     # per column (col+cast+alias each cross the gateway; measured
     # ~0.1 s per call on a 16-column schema, paid by every stage_write).
-    # Falls back to the Column API when a type's DDL rendering contains
-    # characters that could mis-parse (nested field names are not
-    # quoted by simpleString) — identical Cast semantics either way.
-    exprs = []
-    for f in schema.fields:
-        src = have.get(f.name.lower())
-        ddl = S._to_spark_type(f.type).simpleString()
-        if exprs is not None and not any(ch in ddl for ch in " `'\";=\\"):
-            tgt = f.name.replace("`", "``")
-            if src is None:
-                if f.required:
-                    raise ValueError(
-                        f"required column {f.name} missing from input")
-                exprs.append(f"CAST(NULL AS {ddl}) AS `{tgt}`")
-            else:
-                exprs.append(
-                    f"CAST(`{src.replace('`', '``')}` AS {ddl}) AS `{tgt}`")
-        else:
-            exprs = None
-    if exprs is not None:
-        try:
-            return df.selectExpr(*exprs)
-        except Exception:
-            pass  # unparseable rendering → Column-API fallback below
+    # Only atomic types take it: simpleString does not quote nested
+    # field names, so a struct field named `a:int,b` renders DDL that
+    # fails analysis.  Nested schemas use the Column API — identical
+    # Cast semantics either way.
+    if all(f.type.is_primitive for f in schema.fields):
+        exprs = []
+        for f in schema.fields:
+            src = have.get(f.name.lower())
+            ddl = S._to_spark_type(f.type).simpleString()
+            val = "NULL" if src is None else "`%s`" % src.replace("`", "``")
+            exprs.append(f"CAST({val} AS {ddl}) AS `{f.name.replace('`', '``')}`")
+        return df.selectExpr(*exprs)
     cols = []
     for f in schema.fields:
         src = have.get(f.name.lower())
         spark_t = S._to_spark_type(f.type)
         if src is None:
-            if f.required:
-                raise ValueError(f"required column {f.name} missing from input")
             cols.append(F.lit(None).cast(spark_t).alias(f.name))
         else:
             cols.append(F.col(src).cast(spark_t).alias(f.name))
@@ -131,7 +119,7 @@ def _distribute(df, spec: PartitionSpec, sort_order, mode: str, part_cols,
             # columns still routes each partition value to exactly one
             # task, so it's still one file per partition value.
             # Override via write.distribution.partition-count (threaded
-            # as num_partitions) or SPARK_GRAFT_WRITE_PARTITIONS.
+            # as num_partitions).
             nargs = [write_shuffle_width(df)]
         df = df.repartition(*nargs, *[F.col(n) for n in names])
     elif mode == "range" and (names or sort_cols):
@@ -146,13 +134,11 @@ def write_shuffle_width(df, n_groups: Optional[int] = None) -> int:
     """Explicit shuffle width for a pre-write repartition by key.
     Scale-adaptive: the session's default parallelism (executors × cores
     on a cluster, the local core count here), capped at the number of
-    distinct keys when the caller knows it, and overridable via
-    SPARK_GRAFT_WRITE_PARTITIONS.  Used instead of an unnumbered
-    repartition(cols) because AQE coalesces the latter to advisory size
-    — for small-to-medium commits that is ONE post-shuffle task, which
-    then writes every partition directory serially."""
-    env = os.environ.get("SPARK_GRAFT_WRITE_PARTITIONS")
-    n = int(env) if env else df.sparkSession.sparkContext.defaultParallelism
+    distinct keys when the caller knows it.  Used instead of an
+    unnumbered repartition(cols) because AQE coalesces the latter to
+    advisory size — for small-to-medium commits that is ONE post-shuffle
+    task, which then writes every partition directory serially."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     if n_groups:
         n = min(n, int(n_groups))
     return max(1, n)
@@ -224,8 +210,6 @@ def stage_write(spark, table_location: str, df, schema: S.Schema, spec: Partitio
                 properties: Optional[dict] = None) -> list:
     """Write the DataFrame into the table's data dir; return manifest
     entries (dicts with stats + partition tuples)."""
-    from pyspark.sql import functions as F
-
     df = align_to_schema(df, schema)
     part_cols = [(PARTITION_COL_PREFIX + name, expr)
                  for name, expr in spec.spark_partition_columns(schema)]
@@ -269,41 +253,55 @@ def stage_write(spark, table_location: str, df, schema: S.Schema, spec: Partitio
         _attach_nan_counts(spark, staging, schema, stats)
     if file_format == "orc" and spark is not None:
         _attach_orc_bounds(spark, staging, schema, stats)
+
+    def stamp(e):
+        # the schema AND spec the files were PHYSICALLY written under.
+        # The commit-time setdefault would stamp the refreshed base's
+        # current ones — wrong when DDL lands between staging and commit
+        # (the retry loop rebases): a rename made field-ID projection
+        # read the renamed column as all-NULL, and a spec evolution
+        # serialized the staged partition tuple under the NEW spec's
+        # struct — the tuple nulled out and partition pruning then
+        # dropped live files.
+        e["schema_id"] = schema.schema_id
+        e["spec_id"] = spec.spec_id
+        if spec.is_partitioned:
+            e["partition"] = _partition_from_path(e["file_path"], staging,
+                                                  spec)
+
+    return file_entries(stats, file_format, stamp)
+
+
+def file_entries(stats: list, file_format: str, stamp) -> list:
+    """The tail every file writer shares: per-file stats → manifest entry
+    dicts, with ``stamp(entry)`` adding the writer's own fields (schema
+    and spec ids, partition tuple, delete content).  Empty files are
+    deleted, never committed: Spark emits them for empty tasks and
+    partitions, and an empty delete file has no bounds to prune on, so
+    it would be applied to every data file."""
     entries = []
     for st in stats:
-        if (st["record_count"] or 0) == 0:
-            # Spark emits files for empty partitions; don't commit them
+        if not st["record_count"]:
             try:
                 os.unlink(st["file_path"])
             except OSError:
                 pass
             continue
-        partition = _partition_from_path(st["file_path"], staging, spec)
-        e = {
-            "file_path": st["file_path"],
-            "file_format": file_format,
-            "record_count": st["record_count"],
-            "file_size_bytes": st["file_size_bytes"],
-            "value_counts": st["value_counts"],
-            "null_counts": st["null_counts"],
-            "nan_counts": st.get("nan_counts"),
-            "lower_bounds": st["lower_bounds"],
-            "upper_bounds": st["upper_bounds"],
-            # the schema AND spec the files were PHYSICALLY written
-            # under.  The commit-time setdefault would stamp the
-            # refreshed base's current ones — wrong when DDL lands
-            # between staging and commit (the retry loop rebases):
-            # a rename made field-ID projection read the renamed column
-            # as all-NULL, and a spec evolution serialized the staged
-            # partition tuple under the NEW spec's struct — the tuple
-            # nulled out and partition pruning then dropped live files.
-            "schema_id": schema.schema_id,
-            "spec_id": spec.spec_id,
-        }
-        if spec.is_partitioned:
-            e["partition"] = partition
+        e = entry_from_stats(st, file_format)
+        stamp(e)
         entries.append(e)
     return entries
+
+
+def entry_from_stats(st: dict, file_format: str) -> dict:
+    """A manifest entry dict from one file's stats (footer_stats shape;
+    value/null/nan counts may be absent)."""
+    e = {k: st.get(k) for k in ("file_path", "record_count",
+                                "file_size_bytes", "value_counts",
+                                "null_counts", "nan_counts",
+                                "lower_bounds", "upper_bounds")}
+    e["file_format"] = file_format
+    return e
 
 
 def _attach_nan_counts(spark, staging: str, schema: S.Schema, stats: list) -> None:
@@ -398,13 +396,20 @@ def _list_data_files(root: str, ext: str = ".parquet") -> list:
     return sorted(out)
 
 
-def _list_parquet_files(root: str) -> list:
-    return _list_data_files(root, ".parquet")
-
-
 # ---------------------------------------------------------------------------
 # per-file stats (A1): Parquet footer read, driver-side or distributed
 # ---------------------------------------------------------------------------
+
+def map_files(fn, files: list) -> list:
+    """``[fn(p) for p in files]`` on the driver.  Footer and column reads
+    are I/O-bound and release the GIL in pyarrow, so past 8 files a
+    small thread pool cuts the wall time."""
+    if len(files) <= 8:
+        return [fn(p) for p in files]
+    from concurrent.futures import ThreadPoolExecutor
+    with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
+        return list(ex.map(fn, files))
+
 
 def collect_file_stats(spark, files: list, schema: S.Schema,
                        file_format: str = "parquet",
@@ -426,13 +431,8 @@ def collect_file_stats(spark, files: list, schema: S.Schema,
         # pyarrow exposes no ORC footer-statistics API: bounds are
         # harvested with one columnar read per file (orc_stats), then
         # pruning is metadata-only like parquet imports
-        if len(files) > 8:
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-                return list(ex.map(
-                    lambda p: orc_stats(p, schema, alias_map=alias_map),
-                    files))
-        return [orc_stats(p, schema, alias_map=alias_map) for p in files]
+        return map_files(
+            lambda p: orc_stats(p, schema, alias_map=alias_map), files)
     if file_format == "avro":
         # import path (add_files) for pre-existing avro: block headers
         # give row counts without decompression; no bounds (engine-written
@@ -448,17 +448,9 @@ def collect_file_stats(spark, files: list, schema: S.Schema,
     modes = (MF.metrics_modes(properties, MF._stats_columns(schema))
              if properties is not None else None)
     if len(files) <= DRIVER_STATS_MAX_FILES or spark is None:
-        if len(files) > 8:
-            # footer reads are I/O-bound and release the GIL in pyarrow:
-            # a small thread pool cuts the driver-side stats wall time
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-                return list(ex.map(
-                    lambda p: footer_stats(p, schema, alias_map=alias_map,
-                                           modes=modes),
-                    files))
-        return [footer_stats(p, schema, alias_map=alias_map, modes=modes)
-                for p in files]
+        return map_files(
+            lambda p: footer_stats(p, schema, alias_map=alias_map,
+                                   modes=modes), files)
     # distributed path: ship paths, read footers on executors, return JSON
     import pandas as pd
 

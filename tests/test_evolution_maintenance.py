@@ -325,34 +325,47 @@ def test_column_stats_materialize_and_staleness(warehouse, orders, spark):
     assert t.refresh().column_stats() is not None
 
 
-def test_rewrite_position_deletes_preserves_partition_scope(warehouse, spark):
-    """Consolidating position deletes on a partitioned table keeps the
-    per-partition delete-file layout: consolidated entries carry their
-    partition tuple, untouched partitions still plan zero delete files,
+@pytest.mark.parametrize("fmt", ["parquet", "dv"])
+def test_rewrite_position_deletes_preserves_partition_scope(warehouse, spark,
+                                                            fmt):
+    """Partition-scoped position deletes, in either delete format: the
+    MoR writes and their consolidation both produce entries that carry
+    their partition tuple, untouched partitions plan zero delete files,
     and results are unchanged."""
+    from incubator_iceberg_spark import delete_vectors as DV
     from incubator_iceberg_spark.scan import TableScan, parse_predicate
     from incubator_iceberg_spark.schema import Schema
 
+    name = f"db.posrw_{fmt}"
     df = spark.createDataFrame([(i, i % 4, f"p{i}") for i in range(400)],
                                "id long, grp long, payload string")
-    t = warehouse.create_table("db.posrw", Schema.from_spark(df.schema),
-                               partition_by=["grp"])
+    t = warehouse.create_table(name, Schema.from_spark(df.schema),
+                               partition_by=["grp"],
+                               properties={"write.delete.format": fmt})
     t.append(df)
     t.delete_where("grp < 2 AND id % 9 = 0", mode="merge-on-read")
     t.delete_where("grp < 2 AND id % 9 = 1", mode="merge-on-read")
     before = t.to_df().count()
+    assert before == 400 - len([i for i in range(400)
+                                if i % 4 < 2 and i % 9 in (0, 1)])
 
+    def check_scoped(t, n_files):
+        _, dels = t.new_scan()._plan_split()
+        assert len(dels) == n_files
+        assert all(DV.is_dv_entry(e) == (fmt == "dv") for e in dels)
+        assert sorted((e.get("partition") or {}).get("grp")
+                      for e in dels) == sorted([0, 1] * (n_files // 2))
+        _, dels3 = TableScan(t, t.spark, row_filter=parse_predicate(
+            "grp = 3"))._plan_split()
+        assert dels3 == []
+
+    # two MoR deletes x two touched partitions, one file each
+    check_scoped(t, 4)
     out = t.rewrite_position_deletes()
-    assert out["rewritten_delete_files"] > 0
-    t = warehouse.load_table("db.posrw")
+    assert out["rewritten_delete_files"] == 4
+    t = warehouse.load_table(name)
     assert t.to_df().count() == before
-
-    _, dels = t.new_scan()._plan_split()
-    assert dels and all(
-        (e.get("partition") or {}).get("grp") in (0, 1) for e in dels)
-    _, dels3 = TableScan(t, t.spark,
-                         row_filter=parse_predicate("grp = 3"))._plan_split()
-    assert dels3 == []
+    check_scoped(t, 2)
 
 
 def test_delete_column_guards_referenced_fields(warehouse, spark):

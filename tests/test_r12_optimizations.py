@@ -37,7 +37,8 @@ def test_partitioned_append_one_file_per_partition_value(spark, warehouse,
     assert len(entries) == months
 
 
-def test_align_to_schema_selectexpr_matches_column_path(spark, lineitem):
+def test_align_to_schema_selectexpr_matches_column_path(spark, lineitem,
+                                                       monkeypatch):
     from incubator_iceberg_spark import write as W
     from incubator_iceberg_spark.schema import Schema
 
@@ -63,6 +64,24 @@ def test_align_to_schema_selectexpr_matches_column_path(spark, lineitem):
     out3 = W.align_to_schema(df3.select("id", "arr", "s"), sch3)
     assert out3.columns == ["s", "arr", "id"]
     assert out3.count() == 3
+    # hostile nested field names (DDL metacharacters simpleString does
+    # not quote) go straight to the Column API: the selectExpr fast path
+    # is never attempted, so no analysis error is raised and swallowed
+    from pyspark.sql import DataFrame
+    tried = []
+    real_select_expr = DataFrame.selectExpr
+    monkeypatch.setattr(DataFrame, "selectExpr",
+                        lambda self, *e: tried.append(e)
+                        or real_select_expr(self, *e))
+    df4 = spark.range(3).select(
+        F.struct(F.col("id").alias("a:int,b"),
+                 F.col("id").alias("x>")).alias("s"), F.col("id"))
+    sch4 = Schema.from_spark(df4.schema)
+    out4 = W.align_to_schema(df4.select("id", "s"), sch4)
+    assert tried == []
+    assert out4.columns == ["s", "id"]
+    assert out4.schema["s"].dataType.names == ["a:int,b", "x>"]
+    assert sorted(r[0]["x>"] for r in out4.select("s").collect()) == [0, 1, 2]
 
 
 def test_read_entries_avro_lineage_no_duplicate_columns(spark, warehouse,

@@ -149,6 +149,56 @@ def test_events_and_find_files(warehouse, orders):
     assert "record_count" in hits[0] and "partition" in hits[0]
 
 
+def test_commit_events_only_for_landed_snapshots(warehouse, orders):
+    """A CommitEvent means the snapshot landed: a commit that loses the
+    CAS race and retries emits one event (for the snapshot that lands,
+    not one per attempt), and a transaction whose commit fails emits
+    none."""
+    from incubator_iceberg_spark import events
+    from incubator_iceberg_spark.metadata import CommitFailedException
+
+    t = _ingest(warehouse, "db.evcas", orders.limit(40))
+    rival = warehouse.load_table("db.evcas")
+    real_commit = t.ops.commit
+    calls = []
+
+    def racing_commit(base_version, md):
+        calls.append(base_version)
+        if len(calls) == 1:
+            rival.append(orders.limit(5))  # lands first: this attempt loses
+        return real_commit(base_version, md)
+
+    seen = []
+    events.register(seen.append)
+    try:
+        t.ops.commit = racing_commit
+        t.append(orders.limit(7))
+        assert len(calls) == 2  # one conflicted attempt, one retry
+        landed = [e for e in seen if type(e).__name__ == "CommitEvent"]
+        t.refresh()
+        ids = [e.snapshot_id for e in landed]
+        assert len(ids) == 2 and len(set(ids)) == 2  # rival + retry
+        assert set(ids) <= {s.snapshot_id for s in t.snapshots()}
+        assert ids[-1] == t.metadata.current_snapshot_id
+        assert t.to_df().count() == 52
+
+        seen.clear()
+
+        def failing_commit(base_version, md):
+            raise CommitFailedException("forced")
+
+        t.ops.commit = failing_commit
+        tx = t.new_transaction()
+        tx.append(orders.limit(3))
+        tx.append(orders.limit(4))
+        with pytest.raises(CommitFailedException):
+            tx.commit_transaction()
+        assert [e for e in seen if type(e).__name__ == "CommitEvent"] == []
+    finally:
+        events.unregister(seen.append)
+        t.ops.commit = real_commit
+
+
 def test_add_files_partitioned_from_bounds(warehouse, orders, spark, tmp_path):
     """Partitioned import: each file's partition tuple is proven from its
     footer bounds (transformed lower == upper); pruning then works on the
