@@ -461,6 +461,7 @@ def changelog(table, spark=None, from_snapshot_id: Optional[int] = None,
     from pyspark.sql import functions as F
 
     from incubator_iceberg_spark.scan import read_entries
+    from incubator_iceberg_spark.session import local_df
 
     spark = spark or table.spark
     md = table.metadata
@@ -480,7 +481,7 @@ def changelog(table, spark=None, from_snapshot_id: Optional[int] = None,
         .add("_change_type", "string") \
         .add("_change_snapshot_id", "long") \
         .add("_change_ordinal", "integer")
-    out = spark.createDataFrame([], empty_schema)
+    out = local_df(spark, [], empty_schema)
 
     ordinal = 0
     mlist_cache: dict = {}

@@ -155,36 +155,28 @@ def dv_file_stats(path: str) -> dict:
     }
 
 
-def read_dv_pos_df(spark, dv_entries: list, with_source: bool = False):
+def read_dv_pos_df(spark, dv_entries: list, with_source: bool = False,
+                   seqs_df=None):
     """DV entries → DataFrame(file_path, pos, ___del_seq): the decoded
     tuple view feeding the same anti-join as plain position deletes.
     Decode is distributed (mapInPandas over the DV scan) and emits
     int64 rows only — blobs never leave their input partition.
     ``with_source`` adds ``delete_file_path`` (the holding DV file) for
-    the position_deletes inspection table."""
+    the position_deletes inspection table; ``seqs_df`` is the caller's
+    ``deletes.seq_map``."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    schema = DV_SCHEMA.to_spark()
-    df = spark.read.schema(schema).parquet(
+    df = spark.read.schema(DV_SCHEMA.to_spark()).parquet(
         *[e["file_path"] for e in dv_entries])
-    # joined against manifest paths below: must be the DECODED
-    # filesystem path (deletes._decoded_meta_path_col rationale)
-    from incubator_iceberg_spark.deletes import _decoded_meta_path_col
-    src = _decoded_meta_path_col()
-    seqs = {e.get("sequence_number") or 0 for e in dv_entries}
-    if len(seqs) == 1:
-        df = df.withColumn("___del_seq", F.lit(seqs.pop()))
-        if with_source:
-            df = df.withColumn("___dvfile", src)
-    else:
-        seq_df = spark.createDataFrame(
-            [(e["file_path"], e.get("sequence_number") or 0)
-             for e in dv_entries], "___dvfile string, ___del_seq long")
-        df = (df.withColumn("___dvfile", src)
-              .join(F.broadcast(seq_df), "___dvfile"))
-        if not with_source:
-            df = df.drop("___dvfile")
+    # sequence stamp: a literal for single-commit debt, else a broadcast
+    # join on the DECODED filesystem path (deletes._decoded_meta_path_col
+    # rationale) against a LocalRelation — the (path, seq) map is
+    # driver-held, and a list-built DataFrame would add a Python-worker
+    # job to every DV-applying read and rewrite
+    from incubator_iceberg_spark.deletes import stamp_delete_seq
+    df = stamp_delete_seq(spark, df, dv_entries,
+                          file_col="___dvfile" if with_source else None,
+                          seqs_df=seqs_df)
 
     # decode parallelism is otherwise bounded by DV FILE count — a
     # consolidated DV file (the steady state rewrite_position_deletes

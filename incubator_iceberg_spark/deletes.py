@@ -38,6 +38,7 @@ from incubator_iceberg_spark import manifests as MF
 from incubator_iceberg_spark import schema as S
 from incubator_iceberg_spark import snapshots as SN
 from incubator_iceberg_spark import write as W
+from incubator_iceberg_spark.session import local_df
 
 POS_DELETE_SCHEMA = S.Schema([
     S.NestedField(2147483546, "file_path", S.StringType(), required=True),
@@ -116,7 +117,12 @@ def _write_delete_parquet(spark, table_location: str, df, schema: S.Schema,
 
     ``file_stats`` (path → stats dict) replaces the footer-stats
     harvest and ``file_format`` the entries' format (deletion vectors
-    count deleted positions, not rows)."""
+    count deleted positions, not rows).
+
+    The file → partition-group map joins in as a LocalRelation
+    (``session.local_df``), not a DataFrame built from a Python list:
+    a list goes through ``parallelize`` + a Python ``map``, which would
+    add a Python-worker job to every scoped MoR delete write."""
     from pyspark.sql import functions as F
 
     keys = list(keys or [f.name for f in schema.fields])
@@ -129,7 +135,7 @@ def _write_delete_parquet(spark, table_location: str, df, schema: S.Schema,
         pk_rows.append((p, gid))
     df = W.align_to_schema(df, schema)
     if len(groups) > 1:
-        map_df = spark.createDataFrame(pk_rows, "file_path string, __pk int")
+        map_df = local_df(spark, pk_rows, "file_path string, __pk int")
         # numbered width: AQE would coalesce repartition("__pk") to
         # one task that writes every partition dir serially
         (df.join(F.broadcast(map_df), "file_path", "inner")
@@ -514,6 +520,69 @@ def _decoded_meta_path_col():
         r"\+", "%2B"))
 
 
+def seq_map(spark, entries: list, pairs=()):
+    """(path, sequence number) of ``entries`` plus ``pairs`` — data and
+    delete files alike — as ONE LocalRelation (``session.local_df``):
+    driver-held, so no Python worker, unlike a DataFrame built from a
+    Python list (``parallelize`` + a Python ``map`` job on every use).
+    A plan that looks up both data-file and delete-file sequences takes
+    every lookup from one map: Spark broadcasts equal relations once
+    and reuses the exchange, so the plan pays one JVM-only job.  Paths
+    are unique across data and delete files, so one key space holds
+    both."""
+    return local_df(spark, list(pairs) + [
+        (e["file_path"], e.get("sequence_number") or 0) for e in entries],
+        "path string, seq long")
+
+
+def stamp_delete_seq(spark, df, entries: list, file_col: str = None,
+                     seqs_df=None):
+    """``df`` — one multi-path read of ``entries``' delete files — plus
+    ``___del_seq``, each row's delete-file sequence number.  One
+    sequence (single-commit debt, the common single-writer case) is a
+    literal: no ``_metadata`` read, no regexp, no join.  Several are a
+    broadcast join on the decoded file path against ``seqs_df`` (the
+    caller's ``seq_map``, default: one over ``entries``).  ``file_col``
+    keeps the decoded path under that name."""
+    from pyspark.sql import functions as F
+
+    seqs = {e.get("sequence_number") or 0 for e in entries}
+    col = file_col or "___dfile"
+    if file_col or len(seqs) > 1:
+        df = df.withColumn(col, _decoded_meta_path_col())
+    if len(seqs) == 1:
+        return df.withColumn("___del_seq", F.lit(seqs.pop()))
+    if seqs_df is None:
+        seqs_df = seq_map(spark, entries)
+    df = df.join(F.broadcast(seqs_df.toDF(col, "___del_seq")), col)
+    return df if file_col else df.drop(col)
+
+
+def read_pos_delete_tuples(spark, pos_entries: list, seqs_df=None):
+    """Position-delete entries (plain parquet and deletion vectors) →
+    DataFrame(file_path, pos, ___del_seq), or None without entries.
+    Plain files are ONE multi-path read (they share POS_DELETE_SCHEMA)
+    — a per-file read + unionByName builds an O(#files) plan tree,
+    which made a 100-file MoR-debt scan 3x slower than the single
+    eq-file table it was converted from.  Deletion vectors decode to
+    the same tuples and union in: set-union semantics make DV + plain
+    coexistence correct by construction.  ``seqs_df``: the caller's
+    ``seq_map`` (see ``stamp_delete_seq``).  Shared by the read-side
+    anti-join and ``maintenance.rewrite_position_deletes``."""
+    plain = [e for e in pos_entries if not DV.is_dv_entry(e)]
+    dvs = [e for e in pos_entries if DV.is_dv_entry(e)]
+    out = None
+    if plain:
+        out = stamp_delete_seq(
+            spark, spark.read.schema(POS_DELETE_SCHEMA.to_spark())
+            .parquet(*[e["file_path"] for e in plain]), plain,
+            seqs_df=seqs_df).select("file_path", "pos", "___del_seq")
+    if dvs:
+        dv_pos = DV.read_dv_pos_df(spark, dvs, seqs_df=seqs_df)
+        out = dv_pos if out is None else out.unionByName(dv_pos)
+    return out
+
+
 def eq_schema_fingerprint(del_schema: S.Schema) -> str:
     """Write-time schema of an eq-delete parquet, as canonical
     engine-schema JSON stamped into the file's manifest entry.  The
@@ -527,7 +596,8 @@ def eq_schema_fingerprint(del_schema: S.Schema) -> str:
                        separators=(",", ":"))
 
 
-def load_eq_delete_groups(spark, eq_entries: list, table_schema: S.Schema):
+def load_eq_delete_groups(spark, eq_entries: list, table_schema: S.Schema,
+                          seqs_df=None):
     """Yield (current_cols, eq_df, total_record_count) per equality-ids
     group, with ``___del_seq`` stamped per row.  The delete parquet holds
     exactly the equality columns in equality_ids order under their
@@ -541,7 +611,10 @@ def load_eq_delete_groups(spark, eq_entries: list, table_schema: S.Schema):
     schema collapse into ONE multi-path read (the upsert-MoR sink accrues
     one eq file per epoch; a per-file read + unionByName built an
     O(#files) plan tree — same fix the pos side got), with the per-file
-    sequence stamped via a broadcast map on ``_metadata.file_path``.
+    sequence stamped by ``stamp_delete_seq`` (a literal, or a broadcast
+    join against ``seqs_df``, the caller's ``seq_map`` LocalRelation —
+    the map is driver-held, so no list-built DataFrame and no
+    Python-worker job on every eq-delete read and conversion).
     ``total_record_count`` is the summed manifest record_count, or None
     when any entry lacks it — callers gate broadcast on it.  Shared by
     the read-side anti-join and the eq→pos conversion rewrite."""
@@ -589,7 +662,6 @@ def load_eq_delete_groups(spark, eq_entries: list, table_schema: S.Schema):
                 fnames = list(src.names)
                 fsp = from_arrow_schema(src)
             paths = [e["file_path"] for e in bucket]
-            seqs = {e.get("sequence_number") or 0 for e in bucket}
             if fnames == tgt_names:
                 part = spark.read.schema(tgt).parquet(*paths)
                 keep = [F.col(n) for n in tgt_names]
@@ -600,19 +672,8 @@ def load_eq_delete_groups(spark, eq_entries: list, table_schema: S.Schema):
             else:  # foreign/imported delete file: name-based
                 part = spark.read.schema(tgt).parquet(*paths)
                 keep = [F.col(n) for n in tgt_names]
-            if len(seqs) == 1:
-                # single-commit debt: a literal replaces the _metadata
-                # read + regexp + broadcast join the general path pays
-                part = part.select(*keep,
-                                   F.lit(seqs.pop()).alias("___del_seq"))
-            else:
-                part = part.select(
-                    *keep, _decoded_meta_path_col().alias("___dfile"))
-                dseq = spark.createDataFrame(
-                    [(e["file_path"], e.get("sequence_number") or 0)
-                     for e in bucket], "___dfile string, ___del_seq long")
-                part = part.join(F.broadcast(dseq), "___dfile") \
-                    .drop("___dfile")
+            part = stamp_delete_seq(spark, part, bucket, seqs_df=seqs_df) \
+                .select(*keep, "___del_seq")
             eq_df = part if eq_df is None else eq_df.unionByName(part)
             if total_rc is not None:
                 for e in bucket:
@@ -653,15 +714,21 @@ def apply_delete_files(spark, data_df, data_seq_by_file: dict,
                        table_location: str = None):
     """J3: anti-join pos/eq delete files onto a data DataFrame that carries
     ``_file``/``_pos`` lineage columns.  ``data_seq_by_file`` maps plain
-    file paths → sequence numbers for scoping."""
+    file paths → sequence numbers for scoping.
+
+    The data-file and delete-file sequence lookups under these joins
+    are one LocalRelation (``seq_map``), never a DataFrame built from a
+    Python list, which runs ``parallelize`` + a Python ``map``: one
+    Python-worker job per map on every delete-applying read, the
+    largest stage of a MoR-debt read.  Broadcasting the LocalRelation
+    is one JVM-only job, shared by every lookup of the plan."""
     from pyspark.sql import functions as F
 
     if not delete_entries:
         return data_df
 
-    pos_all = [e for e in delete_entries if e.get("content") == MF.POSITION_DELETES]
-    pos_entries = [e for e in pos_all if not DV.is_dv_entry(e)]
-    dv_entries = [e for e in pos_all if DV.is_dv_entry(e)]
+    pos_entries = [e for e in delete_entries
+                   if e.get("content") == MF.POSITION_DELETES]
     eq_entries = [e for e in delete_entries if e.get("content") == MF.EQUALITY_DELETES]
 
     # normalize lineage file uri → manifest-style plain path, attach seq.
@@ -670,51 +737,21 @@ def apply_delete_files(spark, data_df, data_seq_by_file: dict,
     # seq is a literal — the eq-only single-seq scan then pays ZERO
     # per-row _metadata decode and no seq-map broadcast join
     data_seqs = set(data_seq_by_file.values())
-    need_path = bool(pos_entries or dv_entries)
+    need_path = bool(pos_entries)
     from incubator_iceberg_spark.row_ops import _norm_file_col
     df = data_df.withColumn("___path", _norm_file_col()) if need_path \
         else data_df
+    seqs_df = None
     if len(data_seqs) == 1:
         df = df.withColumn("___seq", F.lit(data_seqs.pop()))
     else:
         if not need_path:
             df = df.withColumn("___path", _norm_file_col())
-        seq_rows = [(k, v) for k, v in data_seq_by_file.items()]
-        seq_df = spark.createDataFrame(seq_rows,
-                                       "___path string, ___seq long")
-        df = df.join(F.broadcast(seq_df), "___path", "left")
+        seqs_df = seq_map(spark, delete_entries, data_seq_by_file.items())
+        df = df.join(F.broadcast(seqs_df.toDF("___path", "___seq")),
+                     "___path", "left")
 
-    pos_df = None
-    if pos_entries:
-        # ONE multi-path read for all position-delete files (they share
-        # POS_DELETE_SCHEMA), sequence stamped via a broadcast map on the
-        # lineage path — a per-file read + unionByName built an O(#files)
-        # plan tree that made a 100-file MoR-debt scan 3x slower than the
-        # single-eq-file table it was converted from
-        pos_df = spark.read.schema(POS_DELETE_SCHEMA.to_spark()) \
-            .parquet(*[e["file_path"] for e in pos_entries])
-        pos_seqs = {e.get("sequence_number") or 0 for e in pos_entries}
-        if len(pos_seqs) == 1:
-            # single-commit debt (the common single-writer case): a
-            # literal replaces the _metadata read + regexp + broadcast
-            # join the general path pays to stamp per-file sequences
-            pos_df = pos_df.withColumn("___del_seq", F.lit(pos_seqs.pop()))
-        else:
-            pos_df = pos_df.withColumn("___dfile",
-                                       _decoded_meta_path_col())
-            dseq = spark.createDataFrame(
-                [(e["file_path"], e.get("sequence_number") or 0)
-                 for e in pos_entries], "___dfile string, ___del_seq long")
-            pos_df = pos_df.join(F.broadcast(dseq), "___dfile") \
-                .drop("___dfile")
-    if dv_entries:
-        # deletion vectors: decoded tuple view (distributed mapInPandas)
-        # unions into the same anti-join — set-union semantics make DV +
-        # plain pos coexistence correct by construction
-        dv_pos = DV.read_dv_pos_df(spark, dv_entries)
-        pos_df = dv_pos if pos_df is None else \
-            pos_df.select("file_path", "pos", "___del_seq") \
-                  .unionByName(dv_pos)
+    pos_df = read_pos_delete_tuples(spark, pos_entries, seqs_df)
     if pos_df is not None:
         cond = ((df["___path"] == pos_df["file_path"])
                 & (df["_pos"] == pos_df["pos"])
@@ -727,7 +764,7 @@ def apply_delete_files(spark, data_df, data_seq_by_file: dict,
         # counts are conservatively large → shuffle anti-join, which
         # hash-partitions both sides on the equi keys instead
         total_tuples = 0
-        for e in pos_entries + dv_entries:
+        for e in pos_entries:
             rc = e.get("record_count")
             if not rc:
                 total_tuples = BROADCAST_MAX_DELETE_TUPLES + 1
@@ -739,7 +776,7 @@ def apply_delete_files(spark, data_df, data_seq_by_file: dict,
 
     if eq_entries:
         for cols, eq_df, total_rc in load_eq_delete_groups(
-                spark, eq_entries, table_schema):
+                spark, eq_entries, table_schema, seqs_df):
             cond = None
             for c in cols:
                 piece = df[c].eqNullSafe(eq_df[c])

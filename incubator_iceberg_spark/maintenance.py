@@ -565,7 +565,6 @@ def rewrite_position_deletes(table, spark=None, fmt: Optional[str] = None) -> di
     same file."""
     from pyspark.sql import functions as F
 
-    from incubator_iceberg_spark import delete_vectors as DV
     from incubator_iceberg_spark import deletes as DEL
     from incubator_iceberg_spark import snapshots as SN2
     from incubator_iceberg_spark.scan import TableScan
@@ -577,23 +576,12 @@ def rewrite_position_deletes(table, spark=None, fmt: Optional[str] = None) -> di
     if not pos:
         return {"rewritten_delete_files": 0, "kept_tuples": 0, "dropped_tuples": 0}
 
-    # live data files in scope of each delete file's sequence number
-    live_rows = [(e["file_path"], e.get("sequence_number") or 0) for e in data]
-    live_df = spark.createDataFrame(live_rows, "file_path string, ___data_seq long")
-    plain = [e for e in pos if not DV.is_dv_entry(e)]
-    dvs = [e for e in pos if DV.is_dv_entry(e)]
-    tuples = None
-    total = 0
-    for e in plain:
-        part = (spark.read.schema(DEL.POS_DELETE_SCHEMA.to_spark())
-                .parquet(e["file_path"])
-                .withColumn("___del_seq", F.lit(e.get("sequence_number") or 0)))
-        tuples = part if tuples is None else tuples.unionByName(part)
-        total += e.get("record_count") or 0
-    if dvs:
-        part = DV.read_dv_pos_df(spark, dvs)
-        tuples = part if tuples is None else tuples.unionByName(part)
-        total += sum(e.get("record_count") or 0 for e in dvs)
+    # live data files in scope of each delete file's sequence number:
+    # one LocalRelation for the live-file and delete-file lookups
+    seqs_df = DEL.seq_map(spark, data + pos)
+    live_df = seqs_df.toDF("file_path", "___data_seq")
+    tuples = DEL.read_pos_delete_tuples(spark, pos, seqs_df)
+    total = sum(e.get("record_count") or 0 for e in pos)
     kept = (tuples.join(F.broadcast(live_df), "file_path")
             .filter(F.col("___del_seq") >= F.col("___data_seq"))
             .select("file_path", "pos").distinct())
@@ -671,15 +659,14 @@ def convert_equality_deletes(table, spark=None) -> dict:
     matches = None
     if dirty:
         rows = read_entries(spark, md, dirty, [], schema, with_lineage=True)
-        seq_rows = [(e["file_path"], e.get("sequence_number") or 0)
-                    for e in dirty]
-        seq_df = spark.createDataFrame(seq_rows,
-                                       "___path string, ___seq long")
+        # one LocalRelation for the data-file and eq-file lookups
+        seqs_df = DEL.seq_map(spark, dirty + eqs)
         from incubator_iceberg_spark.row_ops import _norm_file_col
         rows = (rows.withColumn("___path", _norm_file_col())
-                .join(F.broadcast(seq_df), "___path"))
+                .join(F.broadcast(seqs_df.toDF("___path", "___seq")),
+                      "___path"))
         for cols, eq_df, total_rc in DEL.load_eq_delete_groups(
-                spark, eqs, schema):
+                spark, eqs, schema, seqs_df):
             cond = None
             for c in cols:
                 piece = rows[c].eqNullSafe(eq_df[c])

@@ -30,6 +30,7 @@ from incubator_iceberg_spark import manifests as MF
 from incubator_iceberg_spark import partitioning as P
 from incubator_iceberg_spark import py_eval as PE
 from incubator_iceberg_spark import schema as S
+from incubator_iceberg_spark.session import local_df
 
 # metadata below this size plans on the driver (the reference also plans
 # driver-side, BaseTableScan.planFiles); above it, planning runs as Spark
@@ -310,8 +311,8 @@ class TableScan:
                      for s in (md.snapshot_by_id(sid),) if s is not None]
             if not paths:
                 return None
-            ids_df = self.spark.createDataFrame(
-                [(i,) for i in inc_ids], "added_snapshot_id long")
+            ids_df = local_df(self.spark, [(i,) for i in inc_ids],
+                              "added_snapshot_id long")
             mlist_df = (self.spark.read.parquet(*paths)
                         .join(F.broadcast(ids_df), "added_snapshot_id")
                         .dropDuplicates(["manifest_path"]))
@@ -508,7 +509,7 @@ class TableScan:
                 sp = current_schema.to_spark()
                 if with_lineage:
                     sp = sp.add("_file", "string").add("_pos", "long")
-                df = self.spark.createDataFrame([], sp)
+                df = local_df(self.spark, [], sp)
             else:
                 df = parts[0]
                 for p in parts[1:]:
@@ -574,7 +575,7 @@ def read_entries(spark, md, data_entries, delete_entries, current_schema,
         sp = current_schema.to_spark()
         if with_lineage:
             sp = sp.add("_file", "string").add("_pos", "long")
-        return spark.createDataFrame([], sp)
+        return local_df(spark, [], sp)
 
     if delete_entries:
         from incubator_iceberg_spark import deletes as DEL
@@ -752,7 +753,7 @@ def _read_hive_import_group(spark, md, entries, fmt, current_schema,
         pv = e.get("partition") or {}
         rows.append(tuple([e["file_path"], True] +
                           [pv.get(fn) for fn in const_srcs.values()]))
-    consts = spark.createDataFrame(rows, PT.StructType(c_fields))
+    consts = local_df(spark, rows, PT.StructType(c_fields))
     # LEFT join + per-row FILTER guard: an escape/decode mismatch between
     # the URI-decoded _metadata.file_path and the manifest entry paths
     # must be an ERROR, not silent row loss (an inner join dropped such

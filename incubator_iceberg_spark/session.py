@@ -51,3 +51,35 @@ def get_spark(app_name: str = "incubator_iceberg_spark", master: str | None = No
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def local_df(spark, rows, schema):
+    """Driver-held rows (tuples in ``schema`` order) → a DataFrame over
+    a LocalRelation (``LocalTableScan`` in the plan).  ``schema`` is a
+    StructType or a DDL string.
+
+    ``spark.createDataFrame(<list>)`` in classic PySpark goes through
+    ``parallelize`` + a Python ``map``, so every plan that uses the
+    result runs a Python-worker job with ``defaultParallelism`` tasks.
+    An Arrow table in the schema's own Arrow types is handed to the JVM
+    as one stream instead: O(1) py4j calls, no Python worker, no RDD.
+    Values convert as ``createDataFrame`` converts them (timestamps
+    through ``toInternal``, so naive datetimes mean the same instant)."""
+    import pyarrow as pa
+    import pyspark.sql.types as PT
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = PT._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    arrays = []
+    for i, (f, af) in enumerate(zip(schema.fields, arrow_schema)):
+        vals = [r[i] for r in rows]
+        if isinstance(f.dataType, (PT.TimestampType, PT.TimestampNTZType)):
+            vals = [None if v is None else f.dataType.toInternal(v)
+                    for v in vals]
+            arrays.append(pa.array(vals, pa.int64()).cast(af.type))
+        else:
+            arrays.append(pa.array(vals, af.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema)

@@ -9,11 +9,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def norm_cell(v):
